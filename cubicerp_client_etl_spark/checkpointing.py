@@ -27,16 +27,29 @@ chain-friendly token wide.
 
 from __future__ import annotations
 
+import warnings
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 
 def _reliable(df: DataFrame) -> bool:
-    """True iff the session has a reliable checkpoint dir configured."""
+    """True iff the session has a reliable checkpoint dir configured.
+
+    Probed on every pin, never cached: a cluster may set the directory
+    after the first pin. When the JVM cannot be asked (no ``_jsc``, a
+    py4j failure), pins fall back to ``localCheckpoint`` with a
+    warning, shown once per process by the default warning filter."""
     try:
         return (
             df.sparkSession.sparkContext._jsc.sc().getCheckpointDir().isDefined()
         )
-    except Exception:  # pragma: no cover - py4j edge; default to local
+    except (Py4JError, AttributeError):
+        warnings.warn(
+            "checkpoint-dir probe failed; pinning with localCheckpoint, "
+            "which does not survive executor loss",
+            RuntimeWarning,
+        )
         return False
 
 

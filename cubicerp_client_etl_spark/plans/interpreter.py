@@ -13,10 +13,17 @@ parallelism), state transitions on the driver only. The 100-row-chunk
 tail-drop bug (etl_cron.py:49-50) has no analogue — there is no chunking
 to get wrong. The ready→running→done cron sweep itself is
 ``run_ready_jobs`` (etl_cron.run parity over the live transport,
-loopback-server-tested).
+loopback-server-tested), with per-job isolation: a raising job ends in
+state 'error' with its traceback logged and in its ledger, and the
+sweep goes on. Every ledger row is written through ``_append_ledger``
+under the job's process-stable id (``sinks.ledger.ledger_job_id``).
 """
 
 from __future__ import annotations
+
+import logging
+import traceback
+import xmlrpc.client
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,7 +39,11 @@ from cubicerp_client_etl_spark.plans.spec import (
     ResourceSpec,
     TransformSpec,
 )
-from cubicerp_client_etl_spark.sinks.ledger import build_ledger, write_ledger
+from cubicerp_client_etl_spark.sinks.ledger import (
+    build_ledger,
+    ledger_job_id,
+    write_ledger,
+)
 from cubicerp_client_etl_spark.sinks.writers import (
     FWOutColumn,
     write_csv_resource,
@@ -44,8 +55,15 @@ from cubicerp_client_etl_spark.sources.fixed_width import FWColumn, read_fixed_w
 from cubicerp_client_etl_spark.sources.inline import read_inline_payload
 from cubicerp_client_etl_spark.checkpointing import pin_eager
 
+_log = logging.getLogger(__name__)
 
-def _ftp_transport(server):
+
+def _ftp_transport(res: ResourceSpec):
+    """The resource's FTP transport (A7/I6), or None when its server is
+    not an FTP file server."""
+    server = res.server
+    if server is None or server.etl_type != "fs" or server.fs_protocol != "ftp":
+        return None
     from cubicerp_client_etl_spark.transports.ftp import FtpTransport
 
     return FtpTransport(
@@ -87,17 +105,13 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
     paths per H4/H5; A7 FTP staging; A1 begin/end hooks)."""
     res = job.extract
     path = render_date_template(res.f_filename, job.run_date) if res.f_filename else ""
-    if (
-        res.server is not None
-        and res.server.etl_type == "fs"
-        and res.server.fs_protocol == "ftp"
-        and res.f_filename
-    ):
+    if res.f_filename and (ftp := _ftp_transport(res)) is not None:
         # A7: stage the remote file into the local spool; everything
         # downstream is the normal parallel read over the staged copy.
-        path = _ftp_transport(res.server).fetch(res.f_filename, job.run_date)
+        path = ftp.fetch(res.f_filename, job.run_date)
 
-    if res.etl_type == "rpc" and res.rpc_model:
+    delegated = res.etl_type == "rpc" and res.rpc_model
+    if delegated:
         # A2 declared form: the scan runs through the live transport;
         # the domain ships to the server VERBATIM (the reference's
         # delegation, cubicerpetl.py:314-328) — no local re-filter.
@@ -111,14 +125,7 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
             fields=[c.name for c in res.columns],
             schema=res.rpc_schema or None,
         )
-        for k, v in res.row_default_value.items():
-            if k in df.columns:
-                df = df.withColumn(k, F.coalesce(F.col(k), F.lit(v)))
-            else:
-                df = df.withColumn(k, F.lit(v))
-        return df
-
-    if job.job_type == "online" and job.input_payload_b64 is not None:
+    elif job.job_type == "online" and job.input_payload_b64 is not None:
         # A6: inline payload fed through the same parsers as files
         lines = read_inline_payload(spark, job.input_payload_b64)
         df = _parse_lines_as(res, lines)
@@ -181,7 +188,7 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
     else:
         raise ValueError(f"unsupported extract resource: {res}")
 
-    if res.domain:
+    if res.domain and not delegated:
         df = df.filter(compile_domain(list(res.domain)))
     # B3: defaults fill NULL holes (reference merges defaults *under*
     # extracted values, cubicerpetl.py:330-335 — same outcome over NULLs)
@@ -318,29 +325,21 @@ def load_sink(
         )
         rpc_ledger = rpc_ledger.persist(StorageLevel.MEMORY_AND_DISK)
         rpc_ledger.count()  # ship exactly once
-        if job.ledger_path:
-            ledger = build_ledger(
-                rpc_ledger,
-                job_id=hash(job.name) % (2**31),
-                pk_col="pk",
-                level_col="level",
-                message_col="message",
-                model=res.name,
-                model_id_col="model_id",
-            )
-            write_ledger(ledger, job.ledger_path)
+        _append_ledger(
+            rpc_ledger,
+            job,
+            pk_col="pk",
+            level_col="level",
+            message_col="message",
+            model_id_col="model_id",
+        )
+        rpc_ledger.unpersist()
         return merged
 
     path = render_date_template(res.f_filename, job.run_date) if res.f_filename else ""
-    ftp_server = (
-        res.server
-        if res.server is not None
-        and res.server.etl_type == "fs"
-        and res.server.fs_protocol == "ftp"
-        else None
-    )
+    transport = _ftp_transport(res)
     remote_name = None
-    if ftp_server is not None:
+    if transport is not None:
         # I6: render the single-file output into the local spool, then
         # put it to the remote endpoint after the write completes.
         if res.f_type in ("parquet", "orc", "xml"):
@@ -350,7 +349,6 @@ def load_sink(
             )
         import os as _os
 
-        transport = _ftp_transport(ftp_server)
         remote_name = path or res.f_filename
         path = _os.path.join(transport.spool_dir, _os.path.basename(remote_name))
     to_write = merged.drop("action")
@@ -368,7 +366,7 @@ def load_sink(
     elif res.f_type == "csv":
         write_csv_resource(
             to_write, path, sep=res.txt_separator, quote=res.txt_quote,
-            header=res.txt_header, single_file=ftp_server is not None,
+            header=res.txt_header, single_file=transport is not None,
         )
     elif res.f_type == "txt":
         write_fixed_width(
@@ -385,7 +383,7 @@ def load_sink(
     else:
         raise ValueError(f"unsupported load resource: {res}")
 
-    if ftp_server is not None and remote_name is not None:
+    if remote_name is not None:
         # the Spark writers produce a directory; the single part file
         # inside (single_file/ordered mode ⇒ exactly one) is the upload
         import glob as _glob
@@ -398,16 +396,20 @@ def load_sink(
             )
         transport.put(parts[0], remote_name)
 
+    _append_ledger(merged, job, pk_col=job.pk_field, message_col="action")
+    return merged
+
+
+def _append_ledger(rows: DataFrame, job: JobSpec, **columns) -> None:
+    """Append ``rows`` to the job's run ledger, if it has one (I7). Every
+    ledger row (file load, RPC load, sweep error) is written here, keyed
+    by the job's process-stable id; ``columns`` name build_ledger's
+    source columns."""
     if job.ledger_path:
         ledger = build_ledger(
-            merged,
-            job_id=hash(job.name) % (2**31),
-            pk_col=job.pk_field,
-            message_col="action",
-            model=res.name,
+            rows, job_id=ledger_job_id(job.name), model=job.load.name, **columns
         )
         write_ledger(ledger, job.ledger_path)
-    return merged
 
 
 def run_job(
@@ -442,12 +444,22 @@ def run_ready_jobs(
     a test or deployment supplies the mapping). ``existing_target_for
     (job_row) -> DataFrame | None`` supplies the reprocess target.
 
+    Each job is isolated, unlike the reference's cascade where one
+    raising job loses the rest of the sweep: when ``job_builder``,
+    ``existing_target_for`` or ``run_job`` raises, the job record gets
+    ``state: 'error'`` through the standard ``write`` call, its ledger
+    (when the spec has one) gets a ``level='error'`` row holding the
+    traceback, the traceback is logged, and the sweep moves on. Registry
+    reads and the start/done transitions are not isolated: a dead server
+    stops the sweep.
+
     The 100-row chunk loop (etl_cron.py:46-53, with its tail-drop bug
     at :49-50) has no analogue: run_job is one lazy plan and partitions
     are the unit of parallelism. State transitions happen on the
     driver, one RPC each — metadata-sized, like the reference.
 
-    Returns {job id: merged frame} for the jobs that ran.
+    Returns {job id: merged frame} for the jobs that ran; failed jobs
+    are absent.
     """
     rows = transport.search_read(job_model, [], ["id", "name", "state"])
     ran: dict[int, DataFrame] = {}
@@ -459,8 +471,34 @@ def run_ready_jobs(
         elif row.get("state") != "ready":
             continue
         transport.execute_kw(job_model, "action_start", [[jid]])
-        job = job_builder(row)
-        existing = existing_target_for(row) if existing_target_for else None
-        ran[jid] = run_job(spark, job, existing_target=existing)
+        job = None
+        try:
+            job = job_builder(row)
+            existing = existing_target_for(row) if existing_target_for else None
+            ran[jid] = run_job(spark, job, existing_target=existing)
+        except Exception:  # one job's failure must not end the sweep
+            _fail_job(spark, transport, job_model, row, job, traceback.format_exc())
+            continue
         transport.execute_kw(job_model, "action_done", [[jid]])
     return ran
+
+
+def _fail_job(spark, transport, job_model, row, job, tb: str) -> None:
+    """Record one failed sweep job: log the traceback, set the server
+    record to 'error', append the traceback to the job's ledger."""
+    jid = int(row["id"])
+    _log.error("ETL job %d (%s) failed:\n%s", jid, row.get("name"), tb)
+    try:
+        transport.execute_kw(job_model, "write", [[jid], {"state": "error"}])
+    except xmlrpc.client.Fault:
+        _log.exception("server refused state 'error' for ETL job %d", jid)
+    if job is not None:
+        _append_ledger(
+            spark.createDataFrame(
+                [(None, "error", tb)], "pk string, level string, message string"
+            ),
+            job,
+            pk_col="pk",
+            level_col="level",
+            message_col="message",
+        )

@@ -12,6 +12,8 @@ over it instead of driver-side counters.
 
 from __future__ import annotations
 
+import zlib
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -28,6 +30,13 @@ LEDGER_COLUMNS = (
     "amount",
     "ts",
 )
+
+
+def ledger_job_id(job_name: str) -> int:
+    """The ledger's ``job_id`` for a job: CRC-32 of its name. Unlike the
+    built-in ``hash``, which Python salts per process, it is the same in
+    every run, so rows from different runs of one job join on it."""
+    return zlib.crc32(job_name.encode("utf-8"))
 
 
 def build_ledger(

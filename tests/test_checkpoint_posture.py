@@ -52,3 +52,31 @@ def test_reliable_probe_matches_session_state(spark):
     df = spark.range(3)
     jvm_state = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
     assert checkpointing._reliable(df) == jvm_state
+
+
+def test_failing_probe_warns_and_pins_locally():
+    # a session the JVM cannot be asked about (no _jsc, or a py4j
+    # failure) falls back to localCheckpoint, loudly; any other error
+    # is a bug and propagates
+    import types
+
+    import pytest
+    from py4j.protocol import Py4JError
+
+    def frame(sc):
+        return types.SimpleNamespace(
+            sparkSession=types.SimpleNamespace(sparkContext=sc)
+        )
+
+    def raising(ex):
+        def sc():
+            raise ex
+
+        return types.SimpleNamespace(_jsc=types.SimpleNamespace(sc=sc))
+
+    with pytest.warns(RuntimeWarning, match="localCheckpoint"):
+        assert checkpointing._reliable(frame(types.SimpleNamespace(_jsc=None))) is False
+    with pytest.warns(RuntimeWarning, match="localCheckpoint"):
+        assert checkpointing._reliable(frame(raising(Py4JError("gateway gone")))) is False
+    with pytest.raises(ZeroDivisionError):
+        checkpointing._reliable(frame(raising(ZeroDivisionError())))

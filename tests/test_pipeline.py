@@ -215,44 +215,6 @@ def test_hooks_run_in_order(spark, tmp_path):
     assert merged.count() <= 100
 
 
-def test_cron_sweep_isolates_failures(spark, tmp_path):
-    """§3.1 orchestration: ready→running→done transitions, one failing
-    job lands in state='error' with its traceback in the ledger, and the
-    sweep still completes the remaining ready jobs (unlike the
-    reference's cascade, etl_cron.py:39-55)."""
-    from cubicerp_client_etl_spark.plans.cron import JobRun, run_ready_jobs
-
-    good_a = _job(tmp_path / "a")
-    bad = JobSpec(
-        name="broken",
-        extract=ResourceSpec(
-            name="missing",
-            f_type="parquet",
-            f_filename=str(tmp_path / "nope.parquet"),
-        ),
-        transform=TransformSpec(name="t", fields=(FieldSpec("id", field_name="x"),)),
-        load=ResourceSpec(name="out", f_type="csv", f_filename=str(tmp_path / "bad_out")),
-        ledger_path=str(tmp_path / "bad_ledger"),
-    )
-    good_b = _job(tmp_path / "b")
-    done_already = JobRun(spec=_job(tmp_path / "c"), state="done")
-
-    runs = [JobRun(good_a), JobRun(bad), JobRun(good_b), done_already]
-    out = run_ready_jobs(spark, runs)
-
-    assert [r.state for r in out] == ["done", "error", "done", "done"]
-    assert out[1].error and "nope.parquet" in out[1].error
-    # failure is in the broken job's ledger, not swallowed
-    led = spark.read.parquet(str(tmp_path / "bad_ledger"))
-    err = led.filter(F.col("level") == "error").collect()
-    assert len(err) == 1 and err[0]["job"] == "broken"
-    # completed jobs produced their sinks
-    assert out[0].result is not None and out[0].result.count() > 0
-    # re-sweep is a no-op: nothing left in 'ready'
-    again = run_ready_jobs(spark, out)
-    assert [r.state for r in again] == ["done", "error", "done", "done"]
-
-
 def test_orc_and_xml_resource_roundtrip(spark, tmp_path):
     """A9 extension: engine-native ORC and XML resources run the full
     extract→transform→load lifecycle (XML rowTag honored both ways)."""

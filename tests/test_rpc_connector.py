@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cubicerp_client_etl_spark.connectors.mock import MockTransport
-from cubicerp_client_etl_spark.connectors.rpc import rpc_extract, rpc_load
+from cubicerp_client_etl_spark.connectors.rpc import rpc_apply_actions, rpc_extract
 
 
 def test_rpc_extract_mock_roundtrip(spark):
@@ -25,7 +25,10 @@ def test_rpc_extract_mock_roundtrip(spark):
 def test_rpc_load_batches_and_isolates_errors(spark):
     rows = [(i, float(i if i % 5 else -i)) for i in range(1, 251)]
     df = spark.createDataFrame(rows, "k int, v double").repartition(4)
-    ledger = rpc_load(df, MockTransport, "res.partner", pk_col="k", batch_size=100)
+    ledger = rpc_apply_actions(
+        df.withColumn("action", F.lit("inserted")),
+        MockTransport, "res.partner", pk_col="k", batch_size=100,
+    )
     got = ledger.collect()
     assert len(got) == 250  # no tail-drop: every row gets an outcome
     errors = [r for r in got if r["level"] == "error"]
@@ -40,7 +43,10 @@ def test_rpc_load_respects_batch_size(spark):
     # single partition so the mock's call log is observable via an
     # accumulator-free check: route results through the ledger count
     df = spark.createDataFrame([(i, 1.0) for i in range(7)], "k int, v double").coalesce(1)
-    ledger = rpc_load(df, MockTransport, "res.partner", pk_col="k", batch_size=3)
+    ledger = rpc_apply_actions(
+        df.withColumn("action", F.lit("inserted")),
+        MockTransport, "res.partner", pk_col="k", batch_size=3,
+    )
     assert ledger.count() == 7  # 3+3+1 — remainder batch not dropped
 
 
@@ -219,11 +225,10 @@ def test_live_xmlrpc_extract_and_auth(spark):
 
 
 def test_live_xmlrpc_load_batch_and_per_row_degradation(spark):
-    """rpc_load through the REAL socket from executor workers: a clean
-    Arrow chunk lands as ONE batched create; a chunk with a poisoned
-    row degrades to per-row creates, the bad row turns into a ledger
-    error and its neighbors still commit."""
-    from cubicerp_client_etl_spark.connectors.rpc import rpc_load
+    """rpc_apply_actions creates through the REAL socket from executor
+    workers: a clean Arrow chunk lands as ONE batched create; a chunk
+    with a poisoned row degrades to per-row creates, the bad row turns
+    into a ledger error and its neighbors still commit."""
     from cubicerp_client_etl_spark.connectors.xmlrpc import XmlRpcTransport
 
     srv, state, port = _start_server()
@@ -236,7 +241,10 @@ def test_live_xmlrpc_load_batch_and_per_row_degradation(spark):
         df = spark.createDataFrame(
             [(1, 10), (2, 20), (3, -5), (4, 40)], "k long, v long"
         ).coalesce(1)
-        ledger = rpc_load(df, factory, "res.partner", "k", batch_size=10)
+        ledger = rpc_apply_actions(
+            df.withColumn("action", F.lit("inserted")),
+            factory, "res.partner", "k", batch_size=10,
+        )
         rows = {r.pk: (r.level, r.model_id) for r in ledger.collect()}
         assert rows["3"][0] == "error" and rows["3"][1] is None
         assert all(rows[k][0] == "info" for k in ("1", "2", "4"))
@@ -466,11 +474,16 @@ def test_declared_rpc_job_lifecycle_end_to_end(spark, tmp_path):
         srv.shutdown()
 
 
-def test_cron_sweep_runs_only_ready_jobs(spark, tmp_path):
+def test_cron_sweep_runs_only_ready_jobs(spark, tmp_path, caplog):
     """etl_cron parity against the live server: the sweep fetches the
     job registry, runs ONLY 'ready' jobs (ready -> running -> done via
     action_start/action_done model calls), skips done/draft ones, and
-    the job_id override runs a pinned job regardless of state."""
+    the job_id override runs a pinned job regardless of state. A ready
+    job whose extract raises is isolated: the server record goes to
+    'error', its traceback lands in the ledger it shares with a good job
+    (under its stable job id) and in the log, and the next ready job
+    still runs."""
+    import logging
     import xmlrpc.client
 
     from cubicerp_client_etl_spark.plans.interpreter import run_ready_jobs
@@ -482,17 +495,23 @@ def test_cron_sweep_runs_only_ready_jobs(spark, tmp_path):
         TransformSpec,
     )
     from cubicerp_client_etl_spark.connectors.xmlrpc import XmlRpcTransport
+    from cubicerp_client_etl_spark.sinks.ledger import LEDGER_COLUMNS, ledger_job_id
     from cubicerp_client_etl_spark.sinks.writers import write_csv_resource
 
     srv, state, port = _start_server()
     try:
-        # teach the loopback server the job model + state transitions
-        state.store[201] = {"id": 201, "name": "job_a", "state": "ready",
-                            "model": "etl.job"}
-        state.store[202] = {"id": 202, "name": "job_b", "state": "done",
-                            "model": "etl.job"}
-        state.store[203] = {"id": 203, "name": "job_c", "state": "draft",
-                            "model": "etl.job"}
+        # teach the loopback server the job model + state transitions;
+        # the registry lists jobs in id order: 201 (ready), 204 (ready,
+        # its source file is missing), 205 (ready) around done/draft ones
+        for jid, name, st in (
+            (201, "job_a", "ready"),
+            (202, "job_b", "done"),
+            (203, "job_c", "draft"),
+            (204, "job_bad", "ready"),
+            (205, "job_d", "ready"),
+        ):
+            state.store[jid] = {"id": jid, "name": name, "state": st,
+                                "model": "etl.job"}
         orig_execute = _OdooLikeServer.execute_kw
 
         def execute_kw(self, db, uid, pwd, model, method, args, kwargs):
@@ -515,21 +534,22 @@ def test_cron_sweep_runs_only_ready_jobs(spark, tmp_path):
 
         _OdooLikeServer.execute_kw = execute_kw
         try:
-            # a tiny file lifecycle per job (CSV in -> CSV out)
-            started: list[int] = []
+            # a tiny file lifecycle per job (CSV in -> CSV out); jobs 201
+            # and 204 append to one shared ledger
+            shared_ledger = str(tmp_path / "shared_ledger")
 
             def job_builder(row):
                 jid = int(row["id"])
-                started.append(jid)
                 src = tmp_path / f"in_{jid}"
-                write_csv_resource(
-                    spark.createDataFrame(
-                        [(jid, "x"), (jid + 1, "y")], "k long, s string"
-                    ).select(
-                        F.col("k").cast("string"), "s"
-                    ),
-                    str(src),
-                )
+                if jid != 204:
+                    write_csv_resource(
+                        spark.createDataFrame(
+                            [(jid, "x"), (jid + 1, "y")], "k long, s string"
+                        ).select(
+                            F.col("k").cast("string"), "s"
+                        ),
+                        str(src),
+                    )
                 return JobSpec(
                     name=f"job{jid}",
                     extract=ResourceSpec(
@@ -551,17 +571,38 @@ def test_cron_sweep_runs_only_ready_jobs(spark, tmp_path):
                         f_filename=str(tmp_path / f"out_{jid}"),
                     ),
                     pk_field="pk",
+                    ledger_path=shared_ledger if jid in (201, 204) else None,
                 )
 
             t = XmlRpcTransport(
                 f"http://127.0.0.1:{port}", "erp", "admin", "secret"
             )
-            ran = run_ready_jobs(spark, t, job_builder)
-            assert sorted(ran) == [201]
+            with caplog.at_level(
+                logging.ERROR, logger="cubicerp_client_etl_spark.plans.interpreter"
+            ):
+                ran = run_ready_jobs(spark, t, job_builder)
+            assert sorted(ran) == [201, 205]  # the job after the failure ran
             assert state.store[201]["state"] == "done"
             assert state.store[202]["state"] == "done"
             assert state.store[203]["state"] == "draft"  # untouched
-            assert ran[201].count() == 2
+            assert state.store[204]["state"] == "error"
+            assert state.store[205]["state"] == "done"
+            assert ran[201].count() == 2 and ran[205].count() == 2
+            assert "in_204" in caplog.text
+
+            led = spark.read.parquet(shared_ledger)
+            assert tuple(led.columns) == LEDGER_COLUMNS
+            by_level = {}
+            for r in led.collect():
+                by_level.setdefault(r.level, []).append(r)
+            assert sorted(r.pk for r in by_level["info"]) == ["201", "202"]
+            assert {r.job_id for r in by_level["info"]} == {ledger_job_id("job201")}
+            (err,) = by_level["error"]
+            assert err.job_id == ledger_job_id("job204")
+            assert "in_204" in err.message  # the traceback names the file
+
+            # nothing is left in 'ready': a second sweep runs nothing
+            assert run_ready_jobs(spark, t, job_builder) == {}
 
             # job_id override runs a non-ready job (the reference's
             # explicit-job path skips the state check)
@@ -572,3 +613,73 @@ def test_cron_sweep_runs_only_ready_jobs(spark, tmp_path):
             _OdooLikeServer.execute_kw = orig_execute
     finally:
         srv.shutdown()
+
+
+def test_cron_sweep_survives_refused_error_write(caplog):
+    """A server that refuses the 'error' state write is logged and the
+    sweep goes on to the next job; a server that fails a start
+    transition stops the sweep."""
+    import logging
+    import xmlrpc.client
+
+    import pytest
+
+    from cubicerp_client_etl_spark.plans.interpreter import run_ready_jobs
+
+    class Transport:
+        def __init__(self, dead_on=None):
+            self.calls, self.dead_on = [], dead_on
+
+        def search_read(self, model, domain, fields):
+            return [{"id": 1, "name": "a", "state": "ready"},
+                    {"id": 2, "name": "b", "state": "ready"}]
+
+        def execute_kw(self, model, method, args, kwargs=None):
+            self.calls.append((method, args[0][0]))
+            if method == "write":
+                raise xmlrpc.client.Fault(2, "AccessError: state is readonly")
+            if (method, args[0][0]) == self.dead_on:
+                raise ConnectionRefusedError("server gone")
+            return True
+
+    def job_builder(row):
+        raise RuntimeError(f"no spec for {row['name']}")
+
+    t = Transport()
+    with caplog.at_level(
+        logging.ERROR, logger="cubicerp_client_etl_spark.plans.interpreter"
+    ):
+        assert run_ready_jobs(None, t, job_builder) == {}
+    assert t.calls == [("action_start", 1), ("write", 1),
+                       ("action_start", 2), ("write", 2)]
+    assert "no spec for b" in caplog.text and "AccessError" in caplog.text
+
+    t = Transport(dead_on=("action_start", 2))
+    with pytest.raises(ConnectionRefusedError):
+        run_ready_jobs(None, t, job_builder)
+
+
+def test_ledger_job_id_is_stable_across_processes():
+    """The ledger's job_id must not depend on the per-process string
+    hash salt, or rows from two runs of one job could not be joined."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "from cubicerp_client_etl_spark.sinks.ledger import ledger_job_id;"
+        "print(ledger_job_id('file_merge_insert'))"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ids = set()
+    for seed in ("1", "2"):
+        env = {**os.environ, "PYTHONHASHSEED": seed}
+        env["PYTHONPATH"] = os.pathsep.join(
+            p for p in (root, env.get("PYTHONPATH")) if p
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code], env=env, capture_output=True,
+            text=True, check=True, timeout=120,
+        )
+        ids.add(int(out.stdout))
+    assert len(ids) == 1
