@@ -41,23 +41,21 @@ def _toks(col: Column | str) -> Column:
 
 
 def shingles(tokens_col: Column, n: int) -> Column:
-    """``array<string>`` of space-joined token n-grams (empty when the
-    document has fewer than ``n`` tokens).
+    """``array<string>`` of space-joined token n-grams in document order,
+    empty when the document has fewer than ``n`` tokens (or is NULL).
+    The engine's one shingle builder (``dedup.shingles`` wraps it).
+    ``tokens_col`` must be a non-null ``array<string>`` of non-null
+    strings (every caller passes ``split`` output): n=1 returns the
+    array itself, so other elements would pass through unjoined.
 
-    JVM-side: ``transform`` over a ``sequence`` of start offsets with
-    ``slice`` + ``array_join`` — no explode yet, so callers choose when
-    to flatten. Guarded with ``when`` because Spark's ``sequence(1, 0)``
-    counts DOWN (descending step) instead of producing an empty array.
+    A ``zip_with`` chain over shifted views (r16: ~5x faster than
+    ``transform(sequence → slice)`` on the sf1 corpus explode).
+    ``concat_ws`` skips the nulls padding the shorter shifted side; the
+    final slice drops those truncated entries past position ln−n+1.
     """
     if n < 1:
         raise ValueError("shingle size must be >= 1")
     ln = F.size(tokens_col)
-    # r16: zip_with chain over shifted views instead of
-    # transform(sequence → slice+array_join) — one pass, no per-offset
-    # subarray allocation, byte-identical strings (measured ~5x faster
-    # on the sf1 corpus explode; see dedup.shingles). Null-padded tail
-    # entries from the shorter shifted side are truncated shingles at
-    # positions > ln−n+1, which the final slice discards.
     acc = tokens_col
     for k in range(1, n):
         nxt = F.slice(tokens_col, k + 1, F.greatest(ln - k, F.lit(1)))

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from cubicerp_client_etl_spark.functions import e6_floor_ratio
 from cubicerp_client_etl_spark.checkpointing import pin
+from cubicerp_client_etl_spark.operators.curation import shingles as token_shingles
 
 
 def exact_dedup(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataFrame:
@@ -34,6 +35,8 @@ def shingles(
 ) -> Column:
     """Word n-gram shingles as an array of strings (distinct not enforced
     here; MinHash is insensitive to duplicates after the explode-distinct).
+    Fewer than ``n`` tokens: one whole-text shingle; otherwise
+    ``curation.shingles``, the one builder (``n < 1`` raises).
 
     ``tokens`` (opt-in): a pre-split ``array<string>`` column carrying
     exactly ``split(lower(trim(text)), r"\\s+")`` — lets a caller that
@@ -47,21 +50,9 @@ def shingles(
     else:
         c = F.col(text_col) if isinstance(text_col, str) else text_col
         toks = F.split(F.lower(F.trim(c)), r"\s+")
-    # r16 (guide §1.2 "per-task work"): build shingles as a zip_with
-    # chain over shifted views instead of transform(sequence →
-    # slice+concat) — one pass, no per-offset subarray allocation;
-    # measured 5.9 → 1.25 s for the sf1 corpus explode, byte-identical
-    # strings (concat_ws left-to-right equals joining the slice). The
-    # zip pads the shorter (shifted) side with nulls, which concat_ws
-    # skips — those truncated tail entries sit at positions
-    # > size−n+1 and the final slice discards them.
-    acc = toks
-    for k in range(1, n):
-        nxt = F.slice(toks, k + 1, F.greatest(F.size(toks) - k, F.lit(1)))
-        acc = F.zip_with(acc, nxt, lambda x, y: F.concat_ws(" ", x, y))
-    body = F.slice(acc, 1, F.greatest(F.size(toks) - (n - 1), F.lit(1)))
-    return F.when(F.size(toks) < n, F.array(F.concat_ws(" ", toks))).otherwise(
-        body
+    # NULL text: NULL under ANSI (size is NULL), else [""] (size is -1)
+    return F.when(F.size(toks) < n, F.array(F.concat_ws(" ", toks))).when(
+        toks.isNotNull(), token_shingles(toks, n)
     )
 
 
@@ -612,14 +603,12 @@ def remove_duplicate_spans(
     """
     if width < 1:
         raise ValueError("width must be >= 1")
-    from cubicerp_client_etl_spark.operators.curation import shingles
-
     toks = F.split(F.col(text_col), " ")
     base = docs.select(F.col(id_col), toks.alias("_t"))
 
     sh = base.select(
         id_col,
-        F.posexplode(shingles(F.col("_t"), width)).alias("_p0", "_v"),
+        F.posexplode(token_shingles(F.col("_t"), width)).alias("_p0", "_v"),
     ).select(id_col, (F.col("_p0") + 1).alias("pos"), "_v")  # 1-based starts
 
     dup = (
@@ -680,11 +669,9 @@ def shingle_frequencies(
     ultra-hot shingle reduces to one row per input partition before
     the shuffle, so the aggregate itself is skew-immune.
     """
-    from cubicerp_client_etl_spark.operators.curation import shingles as _sh
-
-    toks = F.split(F.col(text_col), " ")
+    sh = F.array_distinct(token_shingles(F.split(F.col(text_col), " "), shingle_n))
     return (
-        docs.select(F.explode(F.array_distinct(_sh(toks, shingle_n))).alias("shingle"))
+        docs.select(F.explode(sh).alias("shingle"))
         .groupBy("shingle")
         .agg(F.count("*").alias("n_docs"))
     )
@@ -720,7 +707,6 @@ def _setsim_prefix_tokens(
     setsim cost at sf1), and the candidate equi-join keys narrow the
     same way (guide §2.3)."""
     from cubicerp_client_etl_spark.catalog import widen_scan
-    from cubicerp_client_etl_spark.operators.curation import shingles as _sh
 
     toks = F.split(F.col(text_col), " ")
     # widen: the per-doc shingle build + sorted-set construction is
@@ -733,7 +719,7 @@ def _setsim_prefix_tokens(
     base = (
         widen_scan(docs).select(
             F.col(id_col).alias("_id"),
-            F.array_sort(F.array_distinct(_sh(toks, shingle_n))).alias("_set"),
+            F.array_sort(F.array_distinct(token_shingles(toks, shingle_n))).alias("_set"),
         )
         .filter(F.size("_set") > 0)
         .withColumn("_sz", F.size("_set").cast("bigint"))
@@ -744,6 +730,10 @@ def _setsim_prefix_tokens(
         base.select(F.explode("_set").alias("_t"))
         .groupBy("_t")
         .agg(F.count("*").alias("_f"))
+        # _code is read only through the ``ordered`` pin below: a lazy
+        # reliable checkpoint re-runs this plan to write its files, so
+        # a direct consumer could see different codes than the pinned
+        # frame; ``ordered`` freezes one assignment for every consumer.
         .withColumn("_code", F.monotonically_increasing_id())
         .transform(pin)
     )

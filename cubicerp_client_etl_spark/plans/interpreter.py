@@ -277,7 +277,6 @@ def load_sink(
     """Apply the reprocess-mode merge against the current target state,
     write per the load resource, append the ledger (I1/I7/C4). Returns
     the merged frame (with the per-row action tag) for inspection."""
-    res = job.load
     mode = job.transform.reprocess
     # C4 shape: the target's recovered server ids (model_id) are load
     # METADATA, not merge payload — pull the (pk -> model_id) map out
@@ -303,7 +302,17 @@ def load_sink(
     # so at scale this trades one extra materialization for N-1 full
     # recomputes of the source scan + merge.
     merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        _load_merged(merged, job, id_map)
+    except BaseException:
+        merged.unpersist()  # a failed job must not leave it cached
+        raise
+    return merged
 
+
+def _load_merged(merged: DataFrame, job: JobSpec, id_map: DataFrame | None) -> None:
+    """Write ``merged`` per the load resource; append the ledger."""
+    res = job.load
     if res.etl_type == "rpc" and res.rpc_model:
         # I1 over RPC (the reference's primary load, cubicerpetl.py:
         # 494-537): merged rows route to create/write/unlink by their
@@ -324,17 +333,19 @@ def load_sink(
             pk_col=job.pk_field,
         )
         rpc_ledger = rpc_ledger.persist(StorageLevel.MEMORY_AND_DISK)
-        rpc_ledger.count()  # ship exactly once
-        _append_ledger(
-            rpc_ledger,
-            job,
-            pk_col="pk",
-            level_col="level",
-            message_col="message",
-            model_id_col="model_id",
-        )
-        rpc_ledger.unpersist()
-        return merged
+        try:
+            rpc_ledger.count()  # ship exactly once
+            _append_ledger(
+                rpc_ledger,
+                job,
+                pk_col="pk",
+                level_col="level",
+                message_col="message",
+                model_id_col="model_id",
+            )
+        finally:
+            rpc_ledger.unpersist()
+        return
 
     path = render_date_template(res.f_filename, job.run_date) if res.f_filename else ""
     transport = _ftp_transport(res)
@@ -397,7 +408,6 @@ def load_sink(
         transport.put(parts[0], remote_name)
 
     _append_ledger(merged, job, pk_col=job.pk_field, message_col="action")
-    return merged
 
 
 def _append_ledger(rows: DataFrame, job: JobSpec, **columns) -> None:

@@ -6,7 +6,11 @@ are computable by eye."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from cubicerp_client_etl_spark.operators.curation import (
@@ -16,6 +20,7 @@ from cubicerp_client_etl_spark.operators.curation import (
     shingles,
     unigram_freq_score,
 )
+from cubicerp_client_etl_spark.operators.dedup import shingles as dedup_shingles
 
 
 def _docs(spark, rows):
@@ -238,21 +243,66 @@ def test_chunking_properties_randomized(spark):
             assert ln == C
 
 
-def test_shingle_count_property(spark):
-    import random
+_WS = re.compile(r"[ \t\n\x0b\f\r]+")  # Java's \s, which Spark's split uses
+_FIXED_TEXTS = [None, "", "a", "a b", "a b c", "a a a a a", "\ta b c", "x  y", " B a "]
 
-    rng = random.Random(7)
-    lengths = [rng.randint(1, 40) for _ in range(20)]
-    rows = [(i, " ".join(f"x{j}" for j in range(n))) for i, n in enumerate(lengths)]
-    df = _docs(spark, rows)
-    got = {
-        r["doc_id"]: r["n"]
-        for r in df.select(
-            "doc_id", F.size(shingles(F.split("text", " "), 5)).alias("n")
-        ).collect()
-    }
-    for i, n in enumerate(lengths):
-        assert got[i] == (n - 4 if n >= 5 else 0)
+
+def _py_shingles(tokens: list[str], n: int) -> list[str]:
+    return [" ".join(tokens[i : i + n]) for i in range(len(tokens) - n + 1)]
+
+
+def _py_dedup_shingles(text: str | None, n: int) -> list[str] | None:
+    if text is None:
+        return None  # size(NULL) is NULL under the session's ANSI mode
+    toks = _WS.split(text.strip(" ").lower())  # trim strips U+0020 only
+    return [" ".join(toks)] if len(toks) < n else _py_shingles(toks, n)
+
+
+def _py_token_shingles(text: str | None, n: int) -> list[str]:
+    toks = [] if text is None else text.split(" ")
+    return _py_shingles(toks, n)
+
+
+_token = st.sampled_from(["a", "b", "B", "cc"])
+_gap = st.sampled_from([" ", "  ", "\t"])
+_edge = st.sampled_from(["", " ", "\t"])
+
+
+@st.composite
+def _texts(draw):
+    toks = draw(st.lists(_token, max_size=7))
+    gaps = [draw(_gap) for _ in toks[1:]]
+    body = toks[0] + "".join(g + t for g, t in zip(gaps, toks[1:])) if toks else ""
+    return draw(_edge) + body + draw(_edge)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(st.lists(st.one_of(st.none(), _texts()), max_size=12))
+def test_shingle_count_property(spark, drawn):
+    """Both shingle entry points against a plain-Python shingler, whole
+    arrays for n in 1..5: ``dedup.shingles`` (trim + lower + split on
+    whitespace runs, short documents kept whole) and
+    ``curation.shingles`` over ``split(text, " ")`` (short documents
+    empty). The fixed texts pin the empty string, NULL, repeats, a
+    leading tab and a doubled space; n in 1..5 makes every text both
+    shorter than, equal to and longer than some n."""
+    texts = _FIXED_TEXTS + drawn
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    ns = range(1, 6)
+    out = df.select(
+        "doc_id",
+        *[dedup_shingles("text", n).alias(f"d{n}") for n in ns],
+        *[shingles(F.split("text", " "), n).alias(f"c{n}") for n in ns],
+    ).collect()
+    got = {r["doc_id"]: r for r in out}
+    for i, text in enumerate(texts):
+        for n in ns:
+            assert got[i][f"d{n}"] == _py_dedup_shingles(text, n), (text, n)
+            assert got[i][f"c{n}"] == _py_token_shingles(text, n), (text, n)
 
 
 def test_compression_ratio_preserves_id_type(spark):

@@ -137,6 +137,35 @@ def test_online_job_inline_payload(spark, tmp_path):
     assert rows == {(10, "X"), (20, "Y"), (30, "NONE")}
 
 
+@pytest.mark.parametrize("failure", ["unsupported_type", "failed_write"])
+def test_failed_load_leaves_no_cached_frame(spark, tmp_path, failure):
+    """load_sink persists its merged frame before it writes; a load that
+    raises after that point must unpersist it, or the cache entry
+    outlives the failed job for the rest of the session."""
+    blocker = tmp_path / "blocker"
+    blocker.write_text("a regular file, so no directory can be made under it")
+    load = (
+        ResourceSpec(name="out", f_type="dbf", f_filename=str(tmp_path / "o"))
+        if failure == "unsupported_type"
+        else ResourceSpec(name="out", f_type="parquet", f_filename=str(blocker / "o"))
+    )
+    job = JobSpec(
+        name="leak1",
+        extract=ResourceSpec(
+            name="inline", f_type="csv", txt_separator=";", columns=(ColumnSpec("k"),)
+        ),
+        transform=TransformSpec(name="t", fields=(FieldSpec("id", value="CAST(k AS INT)"),)),
+        load=load,
+        job_type="online",
+        input_payload_b64=base64.b64encode(b"1\n2\n").decode(),
+        pk_field="id",
+    )
+    spark.catalog.clearCache()
+    with pytest.raises(Exception):
+        run_job(spark, job)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_sql_passthrough_resource(spark):
     """A1 re-owned: the resource's sql_query runs in Spark SQL (with date
     template vars), not shipped to a foreign DB."""

@@ -2,22 +2,30 @@
 """Canonical ever-driver-hashed ledger (judge r12 item 3).
 
 Folds every ``CORRECTNESS_r*.json`` the driver has ever recorded
-through the complete committed rename history (``tools/renumber*.py``,
-rounds 2..12) and emits ``HASHLEDGER.json`` mapping each CURRENT
-registry name to the rounds in which it — under any historical name —
-carried a green driver-hash row (rows+schema+hash all true, err null).
+through the complete committed rename history
+(``tools/rename_history.json``, rounds 2..15) and emits
+``HASHLEDGER.json`` mapping each CURRENT registry name to the rounds in
+which it — under any historical name — carried a green driver-hash row
+(rows+schema+hash all true, err null).
+
+The rename history is an ordered JSON list of
+``{"round": int, "tag": "r2"|"r4"|…|"r6b"|…, "mapping": {old: new}}``,
+oldest first. ``load_history`` is its only reader and checks on every
+load the invariants each rename was applied under: the r2 entry is a
+bijection over the 117 round-1 names, and every later entry is a set of
+pairwise number swaps with the semantic suffix preserved.
 
 Why chaining through *all* maps in chronological order is sound even
 though we don't hardcode when each CORRECTNESS file was recorded
-relative to each swap: every rename is a pairwise number swap with the
-semantic suffix preserved (asserted by each renumber tool), so a
-POST-swap name (qB_x from the pair qA_x<->qB_y) can only equal an OLD
-key of the same map if x == y, i.e. never.  A name recorded after a map
-ran therefore passes through that map unmatched, while a name recorded
-before it translates exactly once.  The r2 map (``renumber.py``) is the
-full two-digit -> zero-padded renumbering of the round-1 corpus; it is
-what makes the round-1 names (``q01_*`` .. ``q120_*``) translatable —
-the piece the judge's own reconstruction was missing.
+relative to each swap: every rename after r2 is a pairwise number swap
+with the suffix preserved, so a POST-swap name (qB_x from the pair
+qA_x<->qB_y) can only equal an OLD key of the same map if x == y, i.e.
+never.  A name recorded after a map ran therefore passes through that
+map unmatched, while a name recorded before it translates exactly once.
+The r2 map is the full two-digit -> zero-padded renumbering of the
+round-1 corpus; it is what makes the round-1 names (``q01_*`` ..
+``q120_*``) translatable — the piece the judge's own reconstruction was
+missing.
 
 The ledger is the single source of truth for rotation planning:
 ``never_hashed`` feeds the incoming side of a window rotation and the
@@ -35,36 +43,39 @@ import re
 import sys
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
+HISTORY = ROOT / "tools" / "rename_history.json"
 
-# Chronological order of every rename that ever ran.
-MAP_FILES = [
-    "renumber.py",  # round 2: q01..q120 two-digit era -> q001..q117
-    "renumber_r4.py",
-    "renumber_r6.py",
-    "renumber_r6b.py",
-    "renumber_r7.py",
-    "renumber_r8.py",
-    "renumber_r8b.py",
-    "renumber_r8c.py",
-    "renumber_r9.py",
-    "renumber_r10.py",
-    "renumber_r11.py",
-    "renumber_r12.py",
-    "renumber_r13.py",
-    "renumber_r14.py",
-    "renumber_r15.py",  # may not exist yet when this tool first runs
-]
+
+def _check_entry(index: int, entry: dict) -> None:
+    tag, mapping = entry["tag"], entry["mapping"]
+    if index == 0:
+        if tag != "r2" or len(mapping) != 117 or len(set(mapping.values())) != 117:
+            raise ValueError("rename history must open with the r2 bijection")
+        return
+    # pairwise NUMBER swaps preserving each query's semantic suffix: the
+    # multiset of numeric prefixes is unchanged, every suffix rides
+    # along, and each swap has its inverse partner in the mapping.
+    swaps = {(k[:4], v[:4]) for k, v in mapping.items()}
+    if sorted(k[:4] for k in mapping) != sorted(v[:4] for v in mapping.values()):
+        raise ValueError(f"{tag}: numeric prefixes are not a permutation")
+    for k, v in mapping.items():
+        if k[5:] != v[5:] or (v[:4], k[:4]) not in swaps:
+            raise ValueError(f"{tag}: {k} -> {v} is not a suffix-preserving swap")
+
+
+def load_history() -> list[dict]:
+    """Every rename that ever ran, oldest first, invariants checked."""
+    entries = json.loads(HISTORY.read_text())
+    for index, entry in enumerate(entries):
+        _check_entry(index, entry)
+    rounds = [e["round"] for e in entries]
+    if rounds != sorted(rounds):
+        raise ValueError(f"rename history is not in round order: {rounds}")
+    return entries
 
 
 def load_maps() -> list[dict[str, str]]:
-    maps = []
-    for name in MAP_FILES:
-        path = ROOT / "tools" / name
-        if not path.exists():
-            continue
-        m = re.search(r"MAPPING\s*=\s*\{(.*?)\n\}", path.read_text(), re.S)
-        maps.append(eval("{" + m.group(1) + "}"))  # noqa: S307 - our own files
-    return maps
+    return [e["mapping"] for e in load_history()]
 
 
 def translate(name: str, maps: list[dict[str, str]]) -> str:
